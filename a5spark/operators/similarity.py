@@ -673,10 +673,18 @@ def _broadcast_pair_scorer(
     def _collect(tbl, id_col):
         rows = tbl.select(id_col, vec).limit(cap + 1).collect()
         # over-cap AND empty both fall back to the join path (an empty
-        # list would build a 1-D (0,) matrix; the join yields empty anyway)
+        # list would build a 1-D (0,) matrix; the join yields empty anyway),
+        # and so does input the matrix cannot hold the way the joins do:
+        # duplicate ids (the joins multiply pairs, get_indexer raises), a
+        # NULL vector or ragged dimensions (the joins give those pairs a
+        # NULL score)
         if len(rows) > cap or not rows:
             return None
         ids = pd.Index([r[0] for r in rows])
+        if not ids.is_unique or any(r[1] is None for r in rows):
+            return None
+        if len({len(r[1]) for r in rows}) != 1:
+            return None
         V = _np_quantize(
             np.array([list(r[1]) for r in rows], dtype=np.float64), scale
         )

@@ -15,6 +15,24 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """Build (or return the running) session with the engine's defaults.
+
+    Python workers fork from a5spark.worker_daemon, not pyspark.daemon. Every
+    Python task starts with importlib.invalidate_caches(), and on Python 3.11
+    that makes each of the ~16 zipimporters over pyspark.zip / py4j-*.zip
+    re-read the archive's central directory: 110-155 ms per task, most of
+    the 270-420 ms a 1-partition no-op Python job cost on a 4-CPU host
+    (63-100 ms in the JVM alone). A radius, kNN or PIP request runs 4-6 such
+    stages. The daemon re-reads an archive only when its stat changed.
+    It is a daemon module, not a patch applied on `import a5spark`, because
+    PythonRDD tasks (query frames built from Python lists) run on workers
+    that never import a5spark; the import-time patch gained ~15% on the
+    spatial_queries benchmark, the daemon ~50%.
+
+    A --py-files deployment cannot use the hook: the zip reaches a worker's
+    path per task, after the daemon has started, so the daemon could not
+    import a5spark. Such a deployment builds its own session, as
+    scripts/submit_pipeline.py does."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(32, cpus)
@@ -39,5 +57,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "a5spark.worker_daemon")
     )
     return builder.getOrCreate()

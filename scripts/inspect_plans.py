@@ -55,7 +55,7 @@ AUDIT = [
 # tree alone can't show
 NOTES = {
     "cell_layout_scan": (
-        "Scan-cost evidence (scripts/layout_evidence.py, sf0.1, local[32]): "
+        "Scan-cost evidence (sf0.1, local[32]): "
         "the res-4 cover opens 3 of 32 files (9.4%), touching 9.25% of rows "
         "and 9.1% of bytes; the pushed `cell_key BETWEEN` disjunction "
         "row-group-prunes within the selected files "

@@ -469,3 +469,65 @@ def test_broadcast_pair_scorer_respects_cap(spark):
     assert sim._broadcast_pair_scorer(
         df, "vec_id", df, "vec_id", "id_a", "id_b", "embedding", 127, cap=20
     ) is not None
+
+
+# --- malformed vector tables take the join path ------------------------------
+
+
+def _crossmodal_both_paths(spark, tmp_path, emb_rows):
+    """q_crossmodal_neardup (text candidate pairs scored against the
+    embeddings table) over 6 documents in 3 identical-text pairs: rows on
+    the default path and on the join path (scorer cap forced to 0). The
+    broadcast scorer must decline the malformed embeddings table."""
+    from a5spark import cache
+    from a5spark import entry_queries as eq
+    from a5spark.operators import similarity as sim
+
+    docs = [(i, f"tile {i // 2} cloud river {i // 2} scan") for i in range(6)]
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    emb = spark.createDataFrame(emb_rows, "vec_id long, embedding array<float>")
+    emb.write.parquet(str(tmp_path / "embeddings.parquet"))
+    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    assert sim._broadcast_pair_scorer(
+        emb, "vec_id", emb, "vec_id", "id_a", "id_b", "embedding", 127
+    ) is None
+    default = _sorted_rows(eq.q_crossmodal_neardup(spark, str(tmp_path)))
+    cache.release_persisted()
+    old_cap = sim._PAIR_BCAST_CAP
+    sim._PAIR_BCAST_CAP = 0
+    try:
+        join = _sorted_rows(eq.q_crossmodal_neardup(spark, str(tmp_path)))
+    finally:
+        sim._PAIR_BCAST_CAP = old_cap
+        cache.release_persisted()
+    assert default, "degenerate test: no candidate pairs"
+    return default, join
+
+
+def _emb_rows(n=6, dim=4):
+    rng = np.random.default_rng(11)
+    return [(i, [float(x) for x in rng.random(dim)]) for i in range(n)]
+
+
+def test_pair_scorer_duplicate_ids_take_join_path(spark, tmp_path):
+    rows = _emb_rows()
+    rows.append((1, rows[0][1]))  # id 1 twice: the joins emit both
+    default, join = _crossmodal_both_paths(spark, tmp_path, rows)
+    assert default == join
+    assert sum(r[:2] == (0, 1) for r in default) == 2
+
+
+def test_pair_scorer_null_vector_takes_join_path(spark, tmp_path):
+    rows = _emb_rows()
+    rows[3] = (3, None)
+    default, join = _crossmodal_both_paths(spark, tmp_path, rows)
+    assert default == join
+
+
+def test_pair_scorer_ragged_dims_take_join_path(spark, tmp_path):
+    rows = _emb_rows()
+    rows[5] = (5, rows[5][1][:2])
+    default, join = _crossmodal_both_paths(spark, tmp_path, rows)
+    assert default == join
