@@ -15,6 +15,7 @@ PIP kernel over the surviving candidates only — the classic filter-and-refine.
 """
 
 import json
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -29,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from a5spark.functions import native
+from a5spark.operators import util
 from a5spark.operators.spatial import cover_join, multires_cover_join
 
 COVER_SCHEMA = StructType(
@@ -166,7 +168,6 @@ def pip_refine(
     lat: str = "lat",
     id_col: str = "polygon_id",
     rings_col: str = "rings_json",
-    chunk_polygons: int = 100_000,
 ) -> DataFrame:
     """Exact point-in-polygon refinement of join candidates: prepared-polygon
     containment (cap -> crossing-number -> winding fallback) streamed with
@@ -176,65 +177,34 @@ def pip_refine(
     side by construction) is broadcast once; prepared structures are built
     once per executor per polygon via a worker-level cache.
 
-    The driver-side rings collect is BOUNDED: layers beyond `chunk_polygons`
-    are processed in deterministic hash chunks (one filtered collect +
-    broadcast per chunk, candidates routed by the same hash, results
-    unioned; chunks call the collect worker directly, no per-chunk
-    re-count) — a 10^6-polygon layer degrades to more passes instead of a
-    driver OOM. The bound is probed by the collect itself (LIMIT cap+1):
-    the common small-layer path pays exactly one job — the collect it needed
-    anyway — and only an over-limit layer runs the count that sizes the
-    chunking. All chunks of one call share ONE prep-cache epoch (their
-    polygon-id sets are hash-disjoint), so concurrently scheduled tasks from
-    different union branches never evict each other's prepared polygons."""
+    The rings are collected with util.bounded_chunks under
+    util.MAX_COLLECT_POLYGONS: one broadcast per chunk, candidates routed
+    by the same hash predicate, results unioned. All chunks of one call
+    share ONE prep-cache epoch (their polygon-id sets are hash-disjoint),
+    so concurrently scheduled tasks from different union branches never
+    evict each other's prepared polygons."""
     global _REFINE_EPOCH
     _REFINE_EPOCH += 1
     bid = _REFINE_EPOCH
-    probe = (
-        polygons.select(id_col, rings_col).limit(chunk_polygons + 1).collect()
-    )
-    if len(probe) <= chunk_polygons:
-        return _pip_refine_collected(
-            df, polygons, lon, lat, id_col, rings_col, bid,
-            rings_by_id={r[0]: r[1] for r in probe},
+    parts = []
+    for pred, pdf in util.bounded_chunks(
+        polygons, [id_col, rings_col], id_col, util.MAX_COLLECT_POLYGONS
+    ):
+        rings_by_id = dict(zip(pdf[id_col].tolist(), pdf[rings_col].tolist()))
+        part = df if pred is None else df.filter(pred)
+        parts.append(
+            _pip_refine_collected(part, lon, lat, id_col, rings_by_id, bid)
         )
-    n_poly = polygons.count()
-    n_chunks = -(-n_poly // chunk_polygons)
-    chunk_of = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks))
-    parts = [
-        _pip_refine_collected(
-            df.filter(chunk_of == c),
-            polygons.filter(chunk_of == c),
-            lon, lat, id_col, rings_col, bid,
-        )
-        for c in range(n_chunks)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _pip_refine_collected(
-    df: DataFrame,
-    polygons: DataFrame,
-    lon: str,
-    lat: str,
-    id_col: str,
-    rings_col: str,
-    bid: int,
-    rings_by_id: dict | None = None,
+    df: DataFrame, lon: str, lat: str, id_col: str, rings_by_id: dict, bid: int
 ) -> DataFrame:
-    """Single-collect refine worker: broadcasts the (bounded) polygon layer.
-    Callers bound |polygons| (see pip_refine) and supply the shared prep-cache
-    epoch `bid`; a caller that already collected the layer passes it as
-    `rings_by_id` so the probe collect is not repeated."""
+    """Single-broadcast refine worker: `rings_by_id` is one bounded part of
+    the polygon layer (see pip_refine), `bid` the call's prep-cache epoch."""
     schema = df.schema
     spark = df.sparkSession
-    if rings_by_id is None:
-        rings_by_id = {
-            r[0]: r[1] for r in polygons.select(id_col, rings_col).collect()
-        }
     from a5spark import cache as _cache
 
     # scope-registered: destroyed by the caller once the result materializes

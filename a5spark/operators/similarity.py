@@ -26,10 +26,13 @@ many interpreted expressions; stay JVM-side when it's one short expression
 per row and the operands are already in the row.
 """
 
+from functools import reduce
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from a5spark.operators import util
 from a5spark.operators.dedup import content_digest
 from a5spark.operators.util import spread as _spread
 
@@ -61,7 +64,6 @@ def _matmul_candidates(
     vec: str,
     quantized: bool,
     scale: int = 1000,
-    max_broadcast_queries: int = 200_000,
 ) -> DataFrame:
     """Blocked-matmul scoring: the (small) query matrix is broadcast to every
     task; each Arrow batch of points scores against ALL queries with one
@@ -71,51 +73,32 @@ def _matmul_candidates(
     quantized=True scores with exact int64 dot products of round(x * scale)
     vectors (engine-portable); otherwise float64 cosine.
 
-    The query fleet is bounded: when |Q| > max_broadcast_queries the fleet is
-    processed in deterministic hash chunks of at most that size (one
-    collect + broadcast + map-only scan per chunk, unioned) — the driver
-    never holds more than one chunk's matrix, so a 10^7-query fleet degrades
-    to more scans instead of a driver OOM.
-
-    The bound is probed by the collect itself (LIMIT max+1): the common
-    small-fleet path pays exactly one job — the collect it needed anyway —
-    and only an over-limit fleet runs the count that sizes the chunking."""
-    probe = queries.select(query_id, vec).limit(max_broadcast_queries + 1).toPandas()
-    if len(probe) <= max_broadcast_queries:
-        return _matmul_broadcast(
-            queries, points, k, query_id, point_id, vec, quantized, scale,
-            qpdf=probe,
-        )
-    n_q = queries.count()
-    # single-level split (no recursion: pmod(hash, n) is correlated
-    # across levels, a re-split of one chunk would never separate it);
-    # hash variance can push a chunk slightly over the bound, which is
-    # fine — the bound is a driver-memory envelope, not an exact quota.
-    # Chunks call the broadcast worker directly (no per-chunk re-count).
-    # The projected+spread point frame is persisted ONCE across chunks (the
-    # first chunk's job materializes it, the rest read the cache), so an
-    # over-limit fleet pays one point-table scan total instead of one per
-    # chunk; the caller's cache scope releases it after materialization.
+    The query fleet is collected with util.bounded_chunks under
+    util.MAX_COLLECT_VECTORS: one broadcast + map-only scan per chunk,
+    unioned. An over-cap fleet persists the projected+spread point frame
+    once (the first chunk's job materializes it, the rest read the cache),
+    so it pays one point-table scan total instead of one per chunk; the
+    caller's cache scope releases it after materialization."""
     from a5spark import cache as _cache
 
-    n_chunks = -(-n_q // max_broadcast_queries)
-    pts = _cache.persist(_spread(points.select(point_id, vec)))
-    chunk = F.pmod(F.xxhash64(F.col(query_id)), F.lit(n_chunks))
-    parts = [
-        _matmul_broadcast(
-            queries.filter(chunk == c), pts, k, query_id, point_id,
-            vec, quantized, scale, prepped=True,
+    pts = _spread(points.select(point_id, vec))
+    parts = []
+    for pred, qpdf in util.bounded_chunks(
+        queries, [query_id, vec], query_id, util.MAX_COLLECT_VECTORS
+    ):
+        if pred is not None and not parts:
+            pts = _cache.persist(pts)
+        parts.append(
+            _matmul_broadcast(
+                queries, qpdf, pts, k, query_id, point_id, vec, quantized, scale
+            )
         )
-        for c in range(n_chunks)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _matmul_broadcast(
     queries: DataFrame,
+    qpdf,
     points: DataFrame,
     k: int,
     query_id: str,
@@ -123,15 +106,10 @@ def _matmul_broadcast(
     vec: str,
     quantized: bool,
     scale: int,
-    qpdf=None,
-    prepped: bool = False,
 ) -> DataFrame:
-    """Single-broadcast scorer: collects the (bounded) query frame, scores
-    every point batch against it. Callers bound |queries| (see
-    _matmul_candidates); a caller that already collected the fleet passes it
-    as `qpdf` so the probe collect is not repeated, and one that already
-    projected+spread (and possibly persisted) the point frame passes
-    prepped=True so it is consumed as-is."""
+    """Single-broadcast scorer: scores every batch of the projected+spread
+    `points` against the collected query frame `qpdf` (a bounded part of
+    `queries`, see _matmul_candidates)."""
     import pandas as pd
     from pyspark.sql.types import (
         DoubleType,
@@ -148,8 +126,6 @@ def _matmul_broadcast(
             StructField("score", DoubleType() if not quantized else LongType()),
         ]
     )
-    if qpdf is None:
-        qpdf = queries.select(query_id, vec).toPandas()
     if len(qpdf) == 0:  # np.stack raises on an empty frame
         return queries.sparkSession.createDataFrame([], schema_out)
     q_ids = qpdf[query_id].to_numpy()
@@ -211,8 +187,7 @@ def _matmul_broadcast(
                 out_s.extend(scores[qi_idx, pj_idx])
             yield pd.DataFrame({query_id: out_q, point_id: out_p, "score": out_s})
 
-    src = points if prepped else _spread(points.select(point_id, vec))
-    return src.mapInPandas(score, schema_out)
+    return points.mapInPandas(score, schema_out)
 
 
 def brute_force_topk(
@@ -222,15 +197,11 @@ def brute_force_topk(
     query_id: str = "q_id",
     point_id: str = "vec_id",
     vec: str = "embedding",
-    max_broadcast_queries: int = 200_000,
 ) -> DataFrame:
     """Exact cosine top-k of each query against all points: blocked numpy
-    matmul per Arrow batch + global window reduction. Query fleets beyond
-    max_broadcast_queries process in hash chunks (bounded driver memory)."""
-    cand = _matmul_candidates(
-        queries, points, k, query_id, point_id, vec, False,
-        max_broadcast_queries=max_broadcast_queries,
-    )
+    matmul per Arrow batch + global window reduction. The query fleet is
+    collected in bounded chunks (see _matmul_candidates)."""
+    cand = _matmul_candidates(queries, points, k, query_id, point_id, vec, False)
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(point_id))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -267,16 +238,12 @@ def quantized_topk(
     query_id: str = "q_id",
     point_id: str = "vec_id",
     vec: str = "embedding",
-    max_broadcast_queries: int = 200_000,
 ) -> DataFrame:
     """Integer-quantized dot-product top-k (deterministic tie-break by id):
     exact int64 scores, bit-identical to the ANSI-SQL formulation (the
-    oracle-checked ANN variant). Query fleets beyond max_broadcast_queries
-    process in hash chunks (bounded driver memory)."""
-    cand = _matmul_candidates(
-        queries, points, k, query_id, point_id, vec, True,
-        max_broadcast_queries=max_broadcast_queries,
-    )
+    oracle-checked ANN variant). The query fleet is collected in bounded
+    chunks (see _matmul_candidates)."""
+    cand = _matmul_candidates(queries, points, k, query_id, point_id, vec, True)
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(point_id))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -621,13 +588,6 @@ def neardup_candidate_pairs(
     )
 
 
-# broadcast-lookup pair scoring: vector tables up to this many rows collect
-# to the driver and broadcast as an int64 matrix (dim x 8 B/vector — 100 MB
-# at the cap for dim=64); larger tables keep the join+fold re-rank, whose
-# shuffle-join shape is the corpus-scale design. Module-level so tests can
-# force the fallback path.
-_PAIR_BCAST_CAP = 200_000
-
 _PAIR_SCORE_SCHEMA = "qdot long, na long, nb long, ok boolean"
 
 
@@ -640,7 +600,6 @@ def _broadcast_pair_scorer(
     pair_b: str,
     vec: str,
     scale: int,
-    cap: int | None = None,
 ):
     """Candidate-pair re-rank against driver-collected quantized matrices —
     the small-table fast path (optimization round 8).
@@ -649,17 +608,17 @@ def _broadcast_pair_scorer(
     attach vectors plus one interpreted dim-element aggregate(zip_with) per
     pair. The earlier pandas_udf einsum alternative shipped BOTH vector
     columns through Arrow per pair (~1 KB/row) and measured 4-17x slower —
-    but shipping nothing works: when a vector table fits a bounded collect
-    (LIMIT cap+1 probe, the same driver-memory envelope pattern as
-    _matmul_candidates / pip_refine), the quantized matrix broadcasts once
-    and each Arrow batch of bare (id_a, id_b) pairs scores with one
-    vectorized gather + einsum. Measured 3x on the embed_neardup scoring
-    step at sf0.1 (1.07 -> 0.35 s for 1.58M pairs, identical rows).
+    but shipping nothing works: when a vector table fits
+    util.bounded_collect under util.MAX_COLLECT_VECTORS, the quantized
+    matrix broadcasts once and each Arrow batch of bare (id_a, id_b) pairs
+    scores with one vectorized gather + einsum. Measured 3x on the
+    embed_neardup scoring step at sf0.1 (1.07 -> 0.35 s for 1.58M pairs,
+    identical rows).
 
     Returns None when either side exceeds the cap (callers keep the join
-    path). Otherwise returns fn(pairs) -> pairs + (qdot, __na, __nb)
-    LongType columns, with pairs whose id is absent from its vector table
-    DROPPED — identical to the inner joins this replaces. Exactness:
+    path, whose shuffle-join shape is the corpus-scale design). Otherwise
+    returns fn(pairs) -> pairs + (qdot, __na, __nb) LongType columns, with
+    pairs whose id is absent from its vector table DROPPED — identical to the inner joins this replaces. Exactness:
     _np_quantize is the documented convention of the Catalyst `quantize`
     expression, and numpy int64 arithmetic wraps mod 2^64 exactly like JVM
     long arithmetic, so scores are bit-identical to the join path."""
@@ -667,27 +626,23 @@ def _broadcast_pair_scorer(
 
     from a5spark import cache
 
-    if cap is None:
-        cap = _PAIR_BCAST_CAP
-
     def _collect(tbl, id_col):
-        rows = tbl.select(id_col, vec).limit(cap + 1).collect()
+        pdf = util.bounded_collect(tbl, [id_col, vec], util.MAX_COLLECT_VECTORS)
         # over-cap AND empty both fall back to the join path (an empty
-        # list would build a 1-D (0,) matrix; the join yields empty anyway),
-        # and so does input the matrix cannot hold the way the joins do:
-        # duplicate ids (the joins multiply pairs, get_indexer raises), a
-        # NULL vector or ragged dimensions (the joins give those pairs a
-        # NULL score)
-        if len(rows) > cap or not rows:
+        # frame would build a 1-D (0,) matrix; the join yields empty
+        # anyway), and so does input the matrix cannot hold the way the
+        # joins do: duplicate ids (the joins multiply pairs, get_indexer
+        # raises), a NULL vector or ragged dimensions (the joins give those
+        # pairs a NULL score)
+        if pdf is None or pdf.empty:
             return None
-        ids = pd.Index([r[0] for r in rows])
-        if not ids.is_unique or any(r[1] is None for r in rows):
+        ids = pd.Index(pdf[id_col])
+        vecs = pdf[vec]
+        if not ids.is_unique or vecs.isna().any():
             return None
-        if len({len(r[1]) for r in rows}) != 1:
+        if vecs.map(len).nunique() != 1:
             return None
-        V = _np_quantize(
-            np.array([list(r[1]) for r in rows], dtype=np.float64), scale
-        )
+        V = _np_quantize(np.stack(vecs.to_numpy()), scale)
         return ids, V, np.einsum("ij,ij->i", V, V)
 
     side_a = _collect(vectors_a, id_a_col)

@@ -32,8 +32,16 @@ def get_spark(
     A --py-files deployment cannot use the hook: the zip reaches a worker's
     path per task, after the daemon has started, so the daemon could not
     import a5spark. Such a deployment builds its own session, as
-    scripts/submit_pipeline.py does."""
+    scripts/submit_pipeline.py does.
+
+    The daemon starts as `python -m a5spark.worker_daemon` in the driver's
+    working directory, so the directory that contains a5spark goes on the
+    Python workers' PYTHONPATH through spark.executorEnv.PYTHONPATH (Spark
+    appends the driver's own PYTHONPATH to it); without it a driver that
+    imports a5spark through sys.path from any other directory fails every
+    Python task."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(32, cpus)
     builder = (
@@ -58,5 +66,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "a5spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pkg_parent)
     )
     return builder.getOrCreate()

@@ -213,9 +213,10 @@ def test_lsh_bucket_cap_matches_duckdb(spark, tmp_path):
     assert len(exp) > 0  # the threshold keeps real near-dups
 
 
-def test_ann_chunked_query_fleet_matches_broadcast(spark):
+def test_ann_chunked_query_fleet_matches_broadcast(spark, monkeypatch):
     """quantized_topk with |Q| over the broadcast bound (forcing 4 hash
     chunks) returns exactly the single-broadcast result."""
+    from a5spark.operators import util
     from a5spark.operators.similarity import quantized_topk
 
     vecs = _hot_cluster_vectors(n_hot=60, n_rand=40)
@@ -226,18 +227,21 @@ def test_ann_chunked_query_fleet_matches_broadcast(spark):
     queries = df.filter((df.vec_id % 3) == 0).select(
         df.vec_id.alias("q_id"), "embedding"
     )
-    big = quantized_topk(queries, df, k=3, max_broadcast_queries=10)
-    one = quantized_topk(queries, df, k=3, max_broadcast_queries=10**6)
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 10)
+    big = quantized_topk(queries, df, k=3)
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 10**6)
+    one = quantized_topk(queries, df, k=3)
     key = lambda r: (r["q_id"], r["rank"], r["vec_id"], r["qdot"])
     assert sorted(map(key, big.collect())) == sorted(map(key, one.collect()))
 
 
-def test_pip_refine_chunked_large_layer(spark):
+def test_pip_refine_chunked_large_layer(spark, monkeypatch):
     """pip_refine with a 10^5-polygon layer: the driver collect is chunked
-    (5 hash chunks at chunk_polygons=20k) and the result equals the
+    (5 hash chunks at a 20k polygon cap) and the result equals the
     single-broadcast path."""
     import json
 
+    from a5spark.operators import util
     from a5spark.operators.polygons import pip_refine
 
     def box(i):
@@ -262,8 +266,10 @@ def test_pip_refine_chunked_large_layer(spark):
     cand = spark.createDataFrame(
         cand_rows, ["polygon_id", "point_id", "lon", "lat"]
     )
-    chunked = pip_refine(cand, polys, chunk_polygons=20_000)
-    single = pip_refine(cand, polys, chunk_polygons=10**9)
+    monkeypatch.setattr(util, "MAX_COLLECT_POLYGONS", 20_000)
+    chunked = pip_refine(cand, polys)
+    monkeypatch.setattr(util, "MAX_COLLECT_POLYGONS", 10**9)
+    single = pip_refine(cand, polys)
     key = lambda r: (r["polygon_id"], r["point_id"])
     got = sorted(map(key, chunked.collect()))
     exp = sorted(map(key, single.collect()))

@@ -791,10 +791,10 @@ def test_matmul_topk_tie_group_bounded_and_exact(spark):
     qs = spark.createDataFrame(
         [(f"q{j}", vec) for j in range(3)], ["q_id", "embedding"]
     )
-    # prepped single-partition points -> exactly ONE scoring batch, so the
+    # single-partition points -> exactly ONE scoring batch, so the
     # per-batch bound is observable: k per query, not the 40-wide tie group
     cand = _matmul_broadcast(
-        qs, pts, 3, "q_id", "vec_id", "embedding", False, 1000, prepped=True
+        qs, qs.toPandas(), pts, 3, "q_id", "vec_id", "embedding", False, 1000
     )
     assert cand.count() == 3 * 3
     top = brute_force_topk(qs, pts, k=3).collect()

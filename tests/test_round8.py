@@ -379,11 +379,12 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_cosine_neardup_broadcast_scorer_matches_join_path(spark):
+def test_cosine_neardup_broadcast_scorer_matches_join_path(spark, monkeypatch):
     """cosine_neardup_pairs with the broadcast-lookup scorer (default) must
     emit exactly the rows of the join+fold path (cap forced to 0)."""
     from a5spark import cache
     from a5spark.operators import similarity as sim
+    from a5spark.operators import util
 
     df, _ = _rand_vec_df(spark, 150, 8, seed=42)
     kwargs = dict(
@@ -392,22 +393,21 @@ def test_cosine_neardup_broadcast_scorer_matches_join_path(spark):
     )
     fast = _sorted_rows(sim.cosine_neardup_pairs(df, **kwargs))
     cache.release_persisted()
-    old_cap = sim._PAIR_BCAST_CAP
-    sim._PAIR_BCAST_CAP = 0
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 0)
     try:
         slow = _sorted_rows(sim.cosine_neardup_pairs(df, **kwargs))
     finally:
-        sim._PAIR_BCAST_CAP = old_cap
         cache.release_persisted()
     assert fast, "degenerate test: no near-dup pairs produced"
     assert fast == slow
 
 
-def test_lsh_topk_broadcast_scorer_matches_join_path(spark):
+def test_lsh_topk_broadcast_scorer_matches_join_path(spark, monkeypatch):
     """lsh_bucket_topk re-rank: broadcast scorer vs join path, including
     qdot ties broken by point id (duplicate vectors in the corpus)."""
     from a5spark import cache
     from a5spark.operators import similarity as sim
+    from a5spark.operators import util
     from pyspark.sql import functions as F
 
     pts, _ = _rand_vec_df(spark, 150, 8, seed=7)
@@ -417,12 +417,10 @@ def test_lsh_topk_broadcast_scorer_matches_join_path(spark):
     kwargs = dict(k=3, dim=8, n_bits=2, n_tables=4, bucket_cap=30, extra_bits=4)
     fast = _sorted_rows(sim.lsh_bucket_topk(qs, pts, **kwargs))
     cache.release_persisted()
-    old_cap = sim._PAIR_BCAST_CAP
-    sim._PAIR_BCAST_CAP = 0
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 0)
     try:
         slow = _sorted_rows(sim.lsh_bucket_topk(qs, pts, **kwargs))
     finally:
-        sim._PAIR_BCAST_CAP = old_cap
         cache.release_persisted()
     assert fast, "degenerate test: no top-k rows produced"
     assert fast == slow
@@ -457,18 +455,18 @@ def test_broadcast_pair_scorer_drops_missing_ids(spark):
         )
 
 
-def test_broadcast_pair_scorer_respects_cap(spark):
+def test_broadcast_pair_scorer_respects_cap(spark, monkeypatch):
     """Over-cap vector tables must return None (callers keep the join path
     — the corpus-scale shape)."""
     from a5spark.operators import similarity as sim
+    from a5spark.operators import util
 
     df, _ = _rand_vec_df(spark, 20, 8, seed=5)
-    assert sim._broadcast_pair_scorer(
-        df, "vec_id", df, "vec_id", "id_a", "id_b", "embedding", 127, cap=19
-    ) is None
-    assert sim._broadcast_pair_scorer(
-        df, "vec_id", df, "vec_id", "id_a", "id_b", "embedding", 127, cap=20
-    ) is not None
+    args = (df, "vec_id", df, "vec_id", "id_a", "id_b", "embedding", 127)
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 19)
+    assert sim._broadcast_pair_scorer(*args) is None
+    monkeypatch.setattr(util, "MAX_COLLECT_VECTORS", 20)
+    assert sim._broadcast_pair_scorer(*args) is not None
 
 
 # --- malformed vector tables take the join path ------------------------------
@@ -482,6 +480,7 @@ def _crossmodal_both_paths(spark, tmp_path, emb_rows):
     from a5spark import cache
     from a5spark import entry_queries as eq
     from a5spark.operators import similarity as sim
+    from a5spark.operators import util
 
     docs = [(i, f"tile {i // 2} cloud river {i // 2} scan") for i in range(6)]
     spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
@@ -495,13 +494,12 @@ def _crossmodal_both_paths(spark, tmp_path, emb_rows):
     ) is None
     default = _sorted_rows(eq.q_crossmodal_neardup(spark, str(tmp_path)))
     cache.release_persisted()
-    old_cap = sim._PAIR_BCAST_CAP
-    sim._PAIR_BCAST_CAP = 0
-    try:
-        join = _sorted_rows(eq.q_crossmodal_neardup(spark, str(tmp_path)))
-    finally:
-        sim._PAIR_BCAST_CAP = old_cap
-        cache.release_persisted()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(util, "MAX_COLLECT_VECTORS", 0)
+        try:
+            join = _sorted_rows(eq.q_crossmodal_neardup(spark, str(tmp_path)))
+        finally:
+            cache.release_persisted()
     assert default, "degenerate test: no candidate pairs"
     return default, join
 

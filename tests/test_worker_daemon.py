@@ -3,6 +3,7 @@ and its selection as the Python worker daemon of get_spark sessions."""
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -98,3 +99,26 @@ def test_get_spark_workers_run_the_guard():
     finally:
         spark.stop()
     assert rows[0]["g"] is True
+
+
+def test_get_spark_workers_find_a5spark_from_another_cwd(tmp_path):
+    """A driver that imports a5spark through sys.path, run from a directory
+    that does not contain it: the workers must still import the daemon."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from a5spark.session import get_spark\n"
+        "spark = get_spark('a5spark-test-cwd', master='local[1]')\n"
+        "rows = spark.createDataFrame([(1, 'a'), (2, 'b')]).collect()\n"
+        "spark.stop()\n"
+        "print(len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "2"
