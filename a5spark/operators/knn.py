@@ -7,9 +7,15 @@ equi-joined against the point table through a JVM-side parent expression —
 never a theta/range join, so Catalyst plans hash joins throughout.
 
 Scale design (100 TB):
-  * the cover relation is (distinct query parent cell) x (cap cells) — it is
-    NOT broadcast explicitly; AQE picks broadcast-hash when it fits and falls
-    back to a shuffle hash join when the query fleet is huge;
+  * the cover relation is (query) x (cap cells of its cover parent). A
+    small fleet (`_fleet_cap`: MAX_COLLECT_VECTORS / max_cells queries over
+    the core count) is collected once and its cover planned on the driver:
+    the relation is a local Arrow frame broadcast explicitly, so the point
+    table is scanned once, map-side, with no shuffle and no Python stage. A
+    larger fleet keeps the distributed plan: the cover comes from the
+    `a5_cap_cover` UDF over the distinct query parents and AQE picks
+    broadcast-hash or shuffle joins by size; a kNN fleet moves to the
+    driver plan once its residual fits;
   * the cover resolution adapts to the radius (bounded cells-per-cap), so a
     continent-sized radius costs a few hundred coarse cells, not millions of
     fine ones;
@@ -19,17 +25,19 @@ Scale design (100 TB):
     guarantee model (traversal/grid_disk.py:51-70) made distributed.
 """
 
+import inspect
 import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from a5spark import cache
 from a5spark.functions import native
 from a5spark.functions.udfs import haversine_m
+from a5spark.operators import util
 
 # half the sphere's great-circle circumference: a cap of this radius covers
 # every cell, making the final kNN round complete by construction
@@ -91,28 +99,45 @@ def a5_spherical_cap(cell: pd.Series, radius_m: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def a5_cap_cover(cell: pd.Series, radius_m: pd.Series) -> pd.Series:
-    """Uncompacted cap cover at each input cell's OWN resolution — the
-    equi-join expansion form (cap -> uncompact). Mixed-resolution batches
-    group by (radius, resolution) so every row uncompacts to its own level."""
+def _cap_cover(cells: np.ndarray, radius_m: np.ndarray):
+    """Uncompacted cap cover of each uint64 cell at its OWN resolution — the
+    equi-join expansion form (cap -> uncompact) — as (row, cover cell)
+    arrays sorted by row. Mixed-resolution input groups by (radius,
+    resolution) so every row uncompacts to its own level. The one cover
+    implementation: the executor UDF and the driver-planned cover both
+    call it."""
+    from a5spark.kernels.cell_info import get_num_children
     from a5spark.kernels.compact import uncompact
-    from a5spark.kernels.serialization import from_signed, get_resolution, to_signed
+    from a5spark.kernels.serialization import get_resolution
     from a5spark.kernels.traversal import spherical_cap_batch
 
-    cells = from_signed(cell.to_numpy(np.int64))
     res = get_resolution(cells)
-    rv = radius_m.to_numpy(np.float64)
-    out = [None] * len(cells)
-    for r in np.unique(rv):
-        for rr in np.unique(res[rv == r]):
-            idx = np.where((rv == r) & (res == rr))[0]
+    out_r, out_c = [np.empty(0, np.int64)], [np.empty(0, np.uint64)]
+    for r in np.unique(radius_m):
+        for rr in np.unique(res[radius_m == r]):
+            idx = np.where((radius_m == r) & (res == rr))[0]
             rows, cap = spherical_cap_batch(cells[idx], float(r))
-            bounds = np.searchsorted(rows, np.arange(len(idx) + 1))
-            for j in range(len(idx)):
-                seg = cap[bounds[j] : bounds[j + 1]]
-                out[idx[j]] = to_signed(uncompact(seg, int(rr))).tolist()
-    return pd.Series(out)
+            # uncompact keeps input order, each cell's children together
+            cap_res = get_resolution(cap)
+            width = np.ones(len(cap), np.int64)
+            for cr in np.unique(cap_res):
+                width[cap_res == cr] = get_num_children(int(cr), int(rr))
+            out_r.append(idx[np.repeat(rows, width)])
+            out_c.append(uncompact(cap, int(rr)))
+    row = np.concatenate(out_r)
+    order = np.argsort(row, kind="stable")
+    return row[order], np.concatenate(out_c)[order]
+
+
+@F.pandas_udf(ArrayType(LongType()))
+def a5_cap_cover(cell: pd.Series, radius_m: pd.Series) -> pd.Series:
+    """Uncompacted cap cover at each input cell's own resolution (_cap_cover)."""
+    from a5spark.kernels.serialization import from_signed, to_signed
+
+    row, cover = _cap_cover(from_signed(cell.to_numpy(np.int64)), radius_m.to_numpy(np.float64))
+    bounds = np.searchsorted(row, np.arange(len(cell) + 1))
+    signed = to_signed(cover)
+    return pd.Series([signed[bounds[j] : bounds[j + 1]].tolist() for j in range(len(cell))])
 
 
 def pick_index_resolution(n_points: int, k: int, max_res: int = 15) -> int:
@@ -176,6 +201,73 @@ def pick_cover_resolution(radius_m: float, index_resolution: int, max_cells: int
     return index_resolution
 
 
+def _fleet_cap(spark) -> int:
+    """Largest query fleet whose cover the driver plans. At
+    pick_cover_resolution's max_cells cover cells per query, a fleet of
+    MAX_COLLECT_VECTORS / max_cells queries makes a broadcast relation of
+    about MAX_COLLECT_VECTORS rows; the cap is that fleet's per-core share,
+    because the driver runs the cover kernel on one core where the UDF
+    fallback spreads it over all of them. Measured on 4 cores at sf0.1 (a
+    cap of 390): 94 queries ran faster planned on the driver, 188-375 about
+    even, 750 and 1,500 slower."""
+    max_cells = inspect.signature(pick_cover_resolution).parameters["max_cells"].default
+    return util.MAX_COLLECT_VECTORS // max_cells // spark.sparkContext.defaultParallelism
+
+
+def _collect_fleet(queries: DataFrame, query_id: str, cell: str):
+    """The query fleet (query_id, q_lon, q_lat, <cell>) as a driver pandas
+    frame, or None over _fleet_cap. Rows with a NULL cell are dropped here,
+    as the cover join drops them, and so never reach pandas as floats."""
+    return util.bounded_collect(
+        queries.filter(F.col(cell).isNotNull()),
+        [query_id, "q_lon", "q_lat", cell],
+        _fleet_cap(queries.sparkSession),
+    )
+
+
+def _driver_covers(
+    queries: DataFrame,
+    fleet: pd.DataFrame,
+    cap_radius: float,
+    resolution: int,
+    cov_res: int,
+    query_id: str,
+    cell: str,
+) -> DataFrame:
+    """The (query_id, q_lon, q_lat, __cov) relation of a collected fleet,
+    built on the driver as a local Arrow frame: each distinct cov_res parent
+    is covered once by _cap_cover, then every query row repeats its parent's
+    cover. Column types follow `queries`."""
+    import pyarrow as pa
+
+    from a5spark.kernels.serialization import cell_to_parent, from_signed, to_signed
+
+    cells = from_signed(fleet[cell].to_numpy(np.int64))
+    if cov_res != resolution:
+        cells = cell_to_parent(cells, cov_res)
+    parents, inv = np.unique(cells, return_inverse=True)
+    row, flat = _cap_cover(parents, np.full(len(parents), float(cap_radius)))
+    n_cov = np.bincount(row, minlength=len(parents))
+    starts = np.cumsum(n_cov) - n_cov
+    per_q = n_cov[inv]
+    q_idx = np.repeat(np.arange(len(fleet)), per_q)
+    # each query's rows are its parent's whole cover: the parent's start in
+    # `flat` plus the row's offset within the query's run
+    offset = np.arange(per_q.sum()) - np.repeat(np.cumsum(per_q) - per_q, per_q)
+    pos = np.repeat(starts[inv], per_q) + offset
+    table = pa.table({
+        query_id: pa.array(fleet[query_id]).take(q_idx),
+        "q_lon": fleet["q_lon"].to_numpy()[q_idx],
+        "q_lat": fleet["q_lat"].to_numpy()[q_idx],
+        "__cov": to_signed(flat[pos]),
+    })
+    schema = StructType(
+        [queries.schema[c] for c in (query_id, "q_lon", "q_lat")]
+        + [StructField("__cov", LongType())]
+    )
+    return queries.sparkSession.createDataFrame(table, schema=schema)
+
+
 def _cap_candidates(
     queries: DataFrame,
     points: DataFrame,
@@ -184,23 +276,32 @@ def _cap_candidates(
     cov_res: int,
     query_id: str,
     cell: str,
+    fleet: pd.DataFrame | None,
 ) -> DataFrame:
     """Point rows joined to every query whose cap (radius `cap_radius`,
     centered on the query cell's cov_res parent center) covers the point's
-    cov_res parent cell. Two hash joins, both AQE-planned:
-      points x covers (on the cover cell)  — covers is small, usually BHJ;
-      candidates x queries (on the query parent) — queries are the small side.
+    cov_res parent cell.
 
-    `queries` must carry (query_id, q_lon, q_lat, <cell>).
-    """
-    spark = queries.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    `queries` must carry (query_id, q_lon, q_lat, <cell>). `fleet`, when
+    given, is its driver copy from _collect_fleet (the rows still to answer):
+    the driver plans the cover and broadcasts the (query, cover cell)
+    relation, so the points are scanned once, map-side, with no shuffle and
+    no Python stage. Without it (a fleet over _fleet_cap) the cover comes
+    from the a5_cap_cover UDF on the executors and both joins are
+    AQE-planned: points x covers (on the cover cell), then candidates x
+    queries (on the query parent)."""
 
     def parent_at(col):
         if cov_res == resolution:
             return col
         return native.cell_to_parent(col, cov_res)
 
+    pts = points.withColumn("__cov", parent_at(F.col(cell)))
+    if fleet is not None:
+        covers = _driver_covers(queries, fleet, cap_radius, resolution, cov_res, query_id, cell)
+        return pts.join(F.broadcast(covers), "__cov").drop("__cov")
+
+    par = queries.sparkSession.sparkContext.defaultParallelism
     q = queries.select(
         F.col(query_id),
         F.col("q_lon"),
@@ -216,7 +317,6 @@ def _cap_candidates(
             F.explode(a5_cap_cover(F.col("__qp"), F.lit(float(cap_radius)))).alias("__cov"),
         )
     )
-    pts = points.withColumn("__cov", parent_at(F.col(cell)))
     return (
         pts.join(covers, "__cov")
         .join(q, "__qp")
@@ -256,7 +356,10 @@ def radius_join(
         F.col("lat").alias("q_lat"),
         F.col(cell),
     )
-    cand = _cap_candidates(q, points, cap_radius, resolution, cov_res, query_id, cell)
+    cand = _cap_candidates(
+        q, points, cap_radius, resolution, cov_res, query_id, cell,
+        _collect_fleet(q, query_id, cell),
+    )
     cand = cand.withColumn(
         "dist_m", haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("lat"), F.col("lon"))
     )
@@ -329,19 +432,23 @@ def knn_join(
         r *= growth
     radii.append(_EARTH_COVER_M)
 
-    remaining = queries.select(
+    q = queries.select(
         F.col(query_id),
         F.col("lon").alias("q_lon"),
         F.col("lat").alias("q_lat"),
         F.col(cell),
     )
+    # the queries still to answer: a driver frame under _fleet_cap, else a
+    # (persisted) Spark frame, re-collected each round once it fits
+    fleet = _collect_fleet(q, query_id, cell)
+    remaining = q
     out = None
     for i, rr in enumerate(radii):
         final = i == len(radii) - 1
         cov_res = pick_cover_resolution(rr, resolution)
         cap_radius = rr + cell_rad + 2.0 * estimate_cell_radius(cov_res)
         cand = _cap_candidates(
-            remaining, points, cap_radius, resolution, cov_res, query_id, cell
+            remaining, points, cap_radius, resolution, cov_res, query_id, cell, fleet
         )
         cand = cand.withColumn(
             "dist_m",
@@ -378,15 +485,19 @@ def knn_join(
             break
         done = cache.persist(scored.filter(F.col("__n_cand") >= k).drop("__n_cand"))
         out = done if out is None else out.unionByName(done)
-        remaining = cache.persist(
-            remaining.join(done.select(query_id).distinct(), query_id, "left_anti")
-        )
-        # Per-round isEmpty probe, kept deliberately (measured): folding it
-        # away makes each residual round execute "empty" — but an empty round
-        # still schedules its repartition/window stages and Python-worker
-        # round-trips (~1s each on this host), which costs MORE than the one
-        # probe job. Most fleets resolve in round 1, so the probe typically
-        # fires once and cuts the remaining rounds entirely.
-        if remaining.isEmpty():
+        # Stop as soon as every query is answered: most fleets resolve in
+        # round 1, and a residual round run on an empty fleet still pays its
+        # stages. A driver fleet drops the answered ids from one collect
+        # (never more rows than the fleet); a Spark fleet is cut by a
+        # left_anti and re-collected, which is also its emptiness probe.
+        if fleet is not None:
+            ids = util.bounded_collect(done.select(query_id).distinct(), [query_id], len(fleet))
+            fleet = fleet[~fleet[query_id].isin(ids[query_id])]
+        else:
+            remaining = cache.persist(
+                remaining.join(done.select(query_id).distinct(), query_id, "left_anti")
+            )
+            fleet = _collect_fleet(remaining, query_id, cell)
+        if fleet is not None and fleet.empty:
             break
     return out

@@ -4,9 +4,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Driver-memory caps, in rows, for the data-sized collects below: query
-# fleets and vector tables (broadcast as dim x 8 B matrices), and polygon
-# layers (broadcast as rings JSON). Read at call time, so tests can lower
-# them.
+# fleets and vector tables (broadcast as dim x 8 B matrices), the
+# (query, cap cover cell) relation of a radius or kNN join (its fleet is
+# capped at MAX_COLLECT_VECTORS / max_cells queries per core,
+# operators/knn.py), and polygon layers (broadcast as rings JSON). Read at
+# call time, so tests can lower them.
 MAX_COLLECT_VECTORS = 200_000
 MAX_COLLECT_POLYGONS = 100_000
 

@@ -54,6 +54,19 @@ AUDIT = [
 # prose audit notes appended under the matching plan — measured context the
 # tree alone can't show
 NOTES = {
+    "radius_join": (
+        "Driver-planned cap cover: the 150-query fleet is under the fleet"
+        " cap (operators/knn.py `_fleet_cap`, MAX_COLLECT_VECTORS / 128 /"
+        " cores), so the driver computes each cover parent's cap once and"
+        " broadcasts the (query, cover cell) relation as a "
+        "LocalTableScan; the point table is scanned once with no Exchange"
+        " before the join and no ArrowEvalPython beyond the cell encode "
+        "of the input. A fleet over the cap falls back to the "
+        "a5_cap_cover UDF over the distinct query parents with both joins"
+        " AQE-planned (tests/test_cap_join.py checks the two plans give "
+        "the same rows). knn_images runs the same cover each round and "
+        "collects only the answered query ids between rounds."
+    ),
     "cell_layout_scan": (
         "Scan-cost evidence (sf0.1, local[32]): "
         "the res-4 cover opens 3 of 32 files (9.4%), touching 9.25% of rows "

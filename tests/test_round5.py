@@ -534,23 +534,37 @@ def test_optimize_crash_windows_and_vacuum(spark):
 
 def test_boundary_udf_low_resolutions_match_reference(spark):
     """res 0 (dodecahedron face) and res 1 (quintant) boundaries flow
-    through the Spark surface and match the reference scalar implementation
-    (the UDF previously returned [] below res 2; only WORLD_CELL, res -1,
-    is genuinely unbounded — reference core/cell.py:275-277)."""
-    import sys
+    through the Spark surface and match the reference (the UDF previously
+    returned [] below res 2; only WORLD_CELL, res -1, is genuinely
+    unbounded — reference core/cell.py:275-277). The reference rings are
+    the golden vectors in tests/golden/boundary_res01.json; when an a5
+    checkout is present the file itself is re-verified against it."""
+    import json
 
     from pyspark.sql import functions as F
 
     from a5spark.functions.udfs import a5_cell_to_boundary
     from a5spark.kernels.compact import uncompact
     from a5spark.kernels.serialization import res0_cells, to_signed
+    from tests.conftest import REFERENCE_ROOT, reference_available
 
-    sys.path.insert(0, "/root/reference")
-    from a5.core.cell import cell_to_boundary as ref
-
+    golden_path = os.path.join(os.path.dirname(__file__), "golden", "boundary_res01.json")
+    with open(golden_path) as f:
+        golden = json.load(f)["boundaries"]
     r0 = np.array(res0_cells()[:4], dtype=np.uint64)
     r1 = uncompact(r0[:2], 1)
     unsigned = np.concatenate([r0, r1])
+    want = {int(c): np.array(golden[format(int(c), "016x")]) for c in unsigned}
+    assert len(want) == len(golden)
+    if reference_available():
+        import sys
+
+        sys.path.insert(0, REFERENCE_ROOT)
+        from a5.core.cell import cell_to_boundary as ref
+
+        for c, ring in want.items():
+            assert np.abs(np.array(ref(c)) - ring).max() < 1e-12
+
     cells = [int(c) for c in to_signed(unsigned)] + [0]
     df = spark.createDataFrame([(c,) for c in cells], ["cell"]).coalesce(1)
     rows = {
@@ -562,9 +576,8 @@ def test_boundary_udf_low_resolutions_match_reference(spark):
     assert rows[0] == []  # WORLD_CELL
     for c_signed, c_unsigned in zip(cells[:-1], unsigned):
         got = np.array(rows[c_signed])
-        want = np.array(ref(int(c_unsigned)))
-        assert got.shape == want.shape
-        assert np.abs(got - want).max() < 1e-12
+        assert got.shape == want[int(c_unsigned)].shape
+        assert np.abs(got - want[int(c_unsigned)]).max() < 1e-12
 
 
 def test_streaming_append_and_optimize_lifecycle(spark):
